@@ -528,217 +528,228 @@ def _build_stages(
             # path stays sequential
             _record_docs(_docs_stage_body(with_doc_ids(corpus)))
 
-    # ------------------------------------------------- stage: postings (per group)
-    base = corpus if "doc_id" in corpus.columns else None
-    if base is None:
-        # re-derive ids by joining the persisted docs (resume-safe: ids
-        # come from disk, not from a recomputed shuffle)
-        docs_ids = spark.read.parquet(paths.docs).select(
-            "doc_id", "repo", "path", "commit"
-        )
-        base = corpus.join(docs_ids, ["repo", "path", "commit"])
-
-    # positional builds carry the token's in-doc position through the
-    # SAME single exchange — no second tokenize pass; the only extra agg
-    # state is collect_list(pos) per (term, doc)
-    tok = (
-        P.tokens_pos(base, tokenizer) if positions else P.tokens(base, tokenizer)
-    ).withColumn("bucket", bucket_col(F.col("term"), num_buckets))
-
-    encode = _encode_udf(block_size)
-    enc_pos = _encode_positions_udf() if positions else None
-    tf_aggs = [F.count("*").cast("int").alias("tf")]
-    if positions:
-        tf_aggs.append(F.sort_array(F.collect_list("pos")).alias("_poss"))
-    pstruct = (
-        F.struct("doc_id", "tf", "pb") if positions else F.struct("doc_id", "tf")
-    )
-    for g in range(bucket_groups):
-        stage = f"postings-{g}/{bucket_groups}"
-        if resume and manifest.stage_done(stage, fingerprint):
-            continue
-        tg = time.time()
-        part = tok if bucket_groups == 1 else tok.where(
-            F.col("bucket") % bucket_groups == g
-        )
-        # ONE shuffle for the whole postings pipeline, keyed on
-        # (bucket, chunk). Both are grouping keys of BOTH aggregations
-        # below, so the exchange satisfies their clustering
-        # requirements and tf counting, posting-list collection,
-        # encode, and the partitionBy write all run exchange-free on
-        # top of it. (Measured against the two-exchange variant —
-        # partial-agged tf shuffle + bucket repartition — the fused
-        # plan is ~3x faster at the quiet-machine floor.)
-        #
-        # Caveat for network-bound clusters: the fused exchange moves
-        # RAW token rows, i.e. ~avg-tf times more shuffle bytes than
-        # the two-exchange variant's map-side-combined (term, doc, tf)
-        # rows. On local mode (in-memory shuffle) the byte volume is
-        # nearly free and task-launch overhead dominates, which is why
-        # fused wins 3x here; where shuffle BYTES are the bottleneck,
-        # build with postings_exchange="combined" (byte-identical
-        # output, pinned by test).
-        #
-        # chunk in the shuffle key is what makes the doc-range salt
-        # real: keyed on bucket alone, every chunk of a hot term
-        # ('import'-class, present in nearly all docs) lands on ONE
-        # reducer, and with only ~cores/num_buckets task waves the
-        # hot-bucket straggler dominates the stage tail as cores grow
-        # (measured: the local[2]->local[8] scaling collapse). Salting
-        # by chunk bounds any reducer's share of one term to
-        # chunk_span docs, so reduce-side work stays balanced at any
-        # cluster size. Partition count scales with cores (floor
-        # num_buckets) and is explicit, which also pins AQE.
-        n_shuffle = max(num_buckets, 8 * par)
-        chunked_tok = part.withColumn(
-            "chunk", (F.col("doc_id") / chunk_span).cast("long")
-        )
-        if postings_exchange == "combined":
-            # map-side partial count combines (term, doc) occurrences
-            # BEFORE any exchange (Catalyst's partial/final agg pair
-            # around the hash exchange on the full grouping key), then
-            # the explicit (bucket, chunk) repartition — carrying only
-            # combined rows — restores the salted clustering the
-            # posting-list agg and partitioned write run on exchange-free
-            tf_rows = chunked_tok.groupBy(
-                "bucket", "chunk", "term", "doc_id"
-            ).agg(*tf_aggs)
-            pre = tf_rows.repartition(n_shuffle, "bucket", "chunk")
-        else:
-            pre = (
-                chunked_tok.repartition(n_shuffle, "bucket", "chunk")
-                .groupBy("bucket", "chunk", "term", "doc_id")
-                .agg(*tf_aggs)
+    # the postings stages run while the docs branch may still be in
+    # flight: whatever they raise, the docs thread is joined first, so a
+    # failed build leaves no live thread behind, and its own error (if
+    # any) rides along as the primary exception's cause
+    try:
+        # ------------------------------------------------- stage: postings (per group)
+        base = corpus if "doc_id" in corpus.columns else None
+        if base is None:
+            # re-derive ids by joining the persisted docs (resume-safe: ids
+            # come from disk, not from a recomputed shuffle)
+            docs_ids = spark.read.parquet(paths.docs).select(
+                "doc_id", "repo", "path", "commit"
             )
+            base = corpus.join(docs_ids, ["repo", "path", "commit"])
+
+        # positional builds carry the token's in-doc position through the
+        # SAME single exchange — no second tokenize pass; the only extra agg
+        # state is collect_list(pos) per (term, doc)
+        tok = (
+            P.tokens_pos(base, tokenizer) if positions else P.tokens(base, tokenizer)
+        ).withColumn("bucket", bucket_col(F.col("term"), num_buckets))
+
+        encode = _encode_udf(block_size)
+        enc_pos = _encode_positions_udf() if positions else None
+        tf_aggs = [F.count("*").cast("int").alias("tf")]
         if positions:
-            # encode each pair's position list to varint bytes BEFORE
-            # the posting-list collect so the second agg's state holds
-            # compact binaries, not int arrays
-            pre = pre.withColumn("pb", enc_pos(F.col("_poss"))).drop("_poss")
-        chunk_rows = (
-            pre.groupBy("bucket", "term", "chunk")
-            .agg(
-                F.sort_array(F.collect_list(pstruct)).alias("p"),
+            tf_aggs.append(F.sort_array(F.collect_list("pos")).alias("_poss"))
+        pstruct = (
+            F.struct("doc_id", "tf", "pb") if positions else F.struct("doc_id", "tf")
+        )
+        for g in range(bucket_groups):
+            stage = f"postings-{g}/{bucket_groups}"
+            if resume and manifest.stage_done(stage, fingerprint):
+                continue
+            tg = time.time()
+            part = tok if bucket_groups == 1 else tok.where(
+                F.col("bucket") % bucket_groups == g
             )
-            .select(
-                "bucket",
-                "term",
-                "chunk",
-                F.size("p").alias("n_docs"),
-                F.aggregate(
-                    F.col("p").getField("tf"),
-                    F.lit(0).cast("long"),
-                    lambda acc, x: acc + x,
-                ).alias("sum_tf"),
-                F.array_max(F.col("p").getField("tf")).alias("max_tf"),
-                encode(
-                    F.col("p").getField("doc_id"), F.col("p").getField("tf")
-                ).alias("blocks"),
-                *(
-                    [
-                        F.arrays_zip(
-                            F.col("p").getField("doc_id"),
-                            F.col("p").getField("pb"),
-                        )
-                        .cast(PLISTS_SCHEMA)
-                        .alias("plists")
-                    ]
-                    if positions
-                    else []
-                ),
+            # ONE shuffle for the whole postings pipeline, keyed on
+            # (bucket, chunk). Both are grouping keys of BOTH aggregations
+            # below, so the exchange satisfies their clustering
+            # requirements and tf counting, posting-list collection,
+            # encode, and the partitionBy write all run exchange-free on
+            # top of it. (Measured against the two-exchange variant —
+            # partial-agged tf shuffle + bucket repartition — the fused
+            # plan is ~3x faster at the quiet-machine floor.)
+            #
+            # Caveat for network-bound clusters: the fused exchange moves
+            # RAW token rows, i.e. ~avg-tf times more shuffle bytes than
+            # the two-exchange variant's map-side-combined (term, doc, tf)
+            # rows. On local mode (in-memory shuffle) the byte volume is
+            # nearly free and task-launch overhead dominates, which is why
+            # fused wins 3x here; where shuffle BYTES are the bottleneck,
+            # build with postings_exchange="combined" (byte-identical
+            # output, pinned by test).
+            #
+            # chunk in the shuffle key is what makes the doc-range salt
+            # real: keyed on bucket alone, every chunk of a hot term
+            # ('import'-class, present in nearly all docs) lands on ONE
+            # reducer, and with only ~cores/num_buckets task waves the
+            # hot-bucket straggler dominates the stage tail as cores grow
+            # (measured: the local[2]->local[8] scaling collapse). Salting
+            # by chunk bounds any reducer's share of one term to
+            # chunk_span docs, so reduce-side work stays balanced at any
+            # cluster size. Partition count scales with cores (floor
+            # num_buckets) and is explicit, which also pins AQE.
+            n_shuffle = max(num_buckets, 8 * par)
+            chunked_tok = part.withColumn(
+                "chunk", (F.col("doc_id") / chunk_span).cast("long")
             )
-        )
-        (
-            # bucket FIRST: the dynamic partitionBy writer requires
-            # rows clustered by the partition column — sorting on it
-            # explicitly (rather than relying on the writer's implicit
-            # inserted sort) both pins the (term, chunk) order inside
-            # each bucket file (row-group pruning depends on it) and
-            # keeps per-bucket file fan-out at one file per task that
-            # holds the bucket instead of one per (task, write batch)
-            chunk_rows.sortWithinPartitions("bucket", "term", "chunk")
-            .write.mode("append")
-            # block payloads are already delta+varint entropy-coded;
-            # a generic codec on top is pure CPU loss (measured ~15%
-            # of the stage at 500k docs)
-            .option("compression", "uncompressed")
-            .partitionBy("bucket")
-            .parquet(paths.postings)
-        )
-        manifest.record_stage(
-            stage, fingerprint,
-            # cumulative across bucket groups (dirs append per group)
-            bytes=dir_bytes(paths.postings),
-            wall_s=time.time() - tg,
-        )
-
-    # ------------------------------------- stage: postings file-fan-out bound
-    # The exchange above writes ≤1 file per (reduce task, bucket), so
-    # files-per-bucket grows as min(n_chunks, shuffle partitions) —
-    # fine at small scale, but on a 1000-executor build a bucket would
-    # collect thousands of small files and every query scan pays their
-    # open cost. Past the bound, rewrite each bucket into few large
-    # (term, chunk)-sorted files; the pass moves only encoded postings.
-    if not (resume and manifest.stage_done("postings-compact", fingerprint)):
-        tc = time.time()
-        # crash recovery for the two-rename swap below: a crash between
-        # the renames leaves the data stranded in .precompact with no
-        # postings dir (roll it back and redo the rewrite); a crash
-        # after both renames leaks .precompact (drop it). Same recovery
-        # discipline as live.py's event-log swap.
-        _pre = paths.postings + ".precompact"
-        if os.path.isdir(_pre):
-            if not os.path.isdir(paths.postings):
-                os.rename(_pre, paths.postings)
+            if postings_exchange == "combined":
+                # map-side partial count combines (term, doc) occurrences
+                # BEFORE any exchange (Catalyst's partial/final agg pair
+                # around the hash exchange on the full grouping key), then
+                # the explicit (bucket, chunk) repartition — carrying only
+                # combined rows — restores the salted clustering the
+                # posting-list agg and partitioned write run on exchange-free
+                tf_rows = chunked_tok.groupBy(
+                    "bucket", "chunk", "term", "doc_id"
+                ).agg(*tf_aggs)
+                pre = tf_rows.repartition(n_shuffle, "bucket", "chunk")
             else:
-                shutil.rmtree(_pre)
-        _tmp = paths.postings + ".compact.tmp"
-        if os.path.isdir(_tmp):
-            shutil.rmtree(_tmp)  # incomplete rewrite from a dead run
-        fcounts = _postings_file_counts(paths.postings)
-        max_files = max(fcounts.values()) if fcounts else 0
-        compacted = False
-        if max_files > max_files_per_bucket:
-            # salt the rewrite by chunk-group: keyed on bucket alone it
-            # is a num_buckets-task stage — a single straggler-bound
-            # wave once the cluster has ~num_buckets cores. The salt
-            # spreads each bucket over salt_mod reducers (so ≤ salt_mod
-            # files per bucket, still within the bound) and widens the
-            # stage to the postings exchange's own width; a pinned-plan
-            # function of (par, num_buckets), so the rewritten layout
-            # stays identical at any cluster size.
-            salt_mod = max(
-                1, min(max_files_per_bucket, (8 * par) // num_buckets)
-            )
-            tmp_dir = paths.postings + ".compact.tmp"
-            (
-                spark.read.parquet(paths.postings)
-                .repartition(
-                    num_buckets * salt_mod,
-                    "bucket",
-                    F.pmod(F.col("chunk"), F.lit(salt_mod)),
+                pre = (
+                    chunked_tok.repartition(n_shuffle, "bucket", "chunk")
+                    .groupBy("bucket", "chunk", "term", "doc_id")
+                    .agg(*tf_aggs)
                 )
-                .sortWithinPartitions("bucket", "term", "chunk")
-                .write.mode("overwrite")
+            if positions:
+                # encode each pair's position list to varint bytes BEFORE
+                # the posting-list collect so the second agg's state holds
+                # compact binaries, not int arrays
+                pre = pre.withColumn("pb", enc_pos(F.col("_poss"))).drop("_poss")
+            chunk_rows = (
+                pre.groupBy("bucket", "term", "chunk")
+                .agg(
+                    F.sort_array(F.collect_list(pstruct)).alias("p"),
+                )
+                .select(
+                    "bucket",
+                    "term",
+                    "chunk",
+                    F.size("p").alias("n_docs"),
+                    F.aggregate(
+                        F.col("p").getField("tf"),
+                        F.lit(0).cast("long"),
+                        lambda acc, x: acc + x,
+                    ).alias("sum_tf"),
+                    F.array_max(F.col("p").getField("tf")).alias("max_tf"),
+                    encode(
+                        F.col("p").getField("doc_id"), F.col("p").getField("tf")
+                    ).alias("blocks"),
+                    *(
+                        [
+                            F.arrays_zip(
+                                F.col("p").getField("doc_id"),
+                                F.col("p").getField("pb"),
+                            )
+                            .cast(PLISTS_SCHEMA)
+                            .alias("plists")
+                        ]
+                        if positions
+                        else []
+                    ),
+                )
+            )
+            (
+                # bucket FIRST: the dynamic partitionBy writer requires
+                # rows clustered by the partition column — sorting on it
+                # explicitly (rather than relying on the writer's implicit
+                # inserted sort) both pins the (term, chunk) order inside
+                # each bucket file (row-group pruning depends on it) and
+                # keeps per-bucket file fan-out at one file per task that
+                # holds the bucket instead of one per (task, write batch)
+                chunk_rows.sortWithinPartitions("bucket", "term", "chunk")
+                .write.mode("append")
+                # block payloads are already delta+varint entropy-coded;
+                # a generic codec on top is pure CPU loss (measured ~15%
+                # of the stage at 500k docs)
                 .option("compression", "uncompressed")
                 .partitionBy("bucket")
-                .parquet(tmp_dir)
+                .parquet(paths.postings)
             )
-            old_dir = paths.postings + ".precompact"
-            os.rename(paths.postings, old_dir)
-            os.rename(tmp_dir, paths.postings)
-            shutil.rmtree(old_dir)
+            manifest.record_stage(
+                stage, fingerprint,
+                # cumulative across bucket groups (dirs append per group)
+                bytes=dir_bytes(paths.postings),
+                wall_s=time.time() - tg,
+            )
+
+        # ------------------------------------- stage: postings file-fan-out bound
+        # The exchange above writes ≤1 file per (reduce task, bucket), so
+        # files-per-bucket grows as min(n_chunks, shuffle partitions) —
+        # fine at small scale, but on a 1000-executor build a bucket would
+        # collect thousands of small files and every query scan pays their
+        # open cost. Past the bound, rewrite each bucket into few large
+        # (term, chunk)-sorted files; the pass moves only encoded postings.
+        if not (resume and manifest.stage_done("postings-compact", fingerprint)):
+            tc = time.time()
+            # crash recovery for the two-rename swap below: a crash between
+            # the renames leaves the data stranded in .precompact with no
+            # postings dir (roll it back and redo the rewrite); a crash
+            # after both renames leaks .precompact (drop it). Same recovery
+            # discipline as live.py's event-log swap.
+            _pre = paths.postings + ".precompact"
+            if os.path.isdir(_pre):
+                if not os.path.isdir(paths.postings):
+                    os.rename(_pre, paths.postings)
+                else:
+                    shutil.rmtree(_pre)
+            _tmp = paths.postings + ".compact.tmp"
+            if os.path.isdir(_tmp):
+                shutil.rmtree(_tmp)  # incomplete rewrite from a dead run
             fcounts = _postings_file_counts(paths.postings)
-            compacted = True
-        manifest.record_stage(
-            "postings-compact", fingerprint,
-            compacted=compacted,
-            files_total=sum(fcounts.values()),
-            files_per_bucket_max=max(fcounts.values()) if fcounts else 0,
-            n_bucket_dirs=len(fcounts),
-            bytes=dir_bytes(paths.postings),
-            wall_s=time.time() - tc,
-        )
+            max_files = max(fcounts.values()) if fcounts else 0
+            compacted = False
+            if max_files > max_files_per_bucket:
+                # salt the rewrite by chunk-group: keyed on bucket alone it
+                # is a num_buckets-task stage — a single straggler-bound
+                # wave once the cluster has ~num_buckets cores. The salt
+                # spreads each bucket over salt_mod reducers (so ≤ salt_mod
+                # files per bucket, still within the bound) and widens the
+                # stage to the postings exchange's own width; a pinned-plan
+                # function of (par, num_buckets), so the rewritten layout
+                # stays identical at any cluster size.
+                salt_mod = max(
+                    1, min(max_files_per_bucket, (8 * par) // num_buckets)
+                )
+                tmp_dir = paths.postings + ".compact.tmp"
+                (
+                    spark.read.parquet(paths.postings)
+                    .repartition(
+                        num_buckets * salt_mod,
+                        "bucket",
+                        F.pmod(F.col("chunk"), F.lit(salt_mod)),
+                    )
+                    .sortWithinPartitions("bucket", "term", "chunk")
+                    .write.mode("overwrite")
+                    .option("compression", "uncompressed")
+                    .partitionBy("bucket")
+                    .parquet(tmp_dir)
+                )
+                old_dir = paths.postings + ".precompact"
+                os.rename(paths.postings, old_dir)
+                os.rename(tmp_dir, paths.postings)
+                shutil.rmtree(old_dir)
+                fcounts = _postings_file_counts(paths.postings)
+                compacted = True
+            manifest.record_stage(
+                "postings-compact", fingerprint,
+                compacted=compacted,
+                files_total=sum(fcounts.values()),
+                files_per_bucket_max=max(fcounts.values()) if fcounts else 0,
+                n_bucket_dirs=len(fcounts),
+                bytes=dir_bytes(paths.postings),
+                wall_s=time.time() - tc,
+            )
+    except BaseException as exc:
+        if docs_thread is not None:
+            docs_thread.join()
+            if "err" in docs_result and exc.__cause__ is None:
+                exc.__cause__ = docs_result["err"]
+        raise
 
     # docs branch joins here: stats must land before the terms stage
     # merges n_terms into them, and any failure in the branch must fail

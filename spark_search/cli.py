@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import math
 import sys
 import time
 
@@ -49,6 +50,26 @@ def _session(args):
     spark = b.config("spark.sql.adaptive.enabled", "true").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def _parse_field_index(p, spec: str):
+    """``NAME=DIR:WEIGHT`` -> (name, dir, weight), or a usage error.
+    The weight is the text after the LAST ':' and must be a number, so
+    a directory holding ':' (``s3a://...``) still parses."""
+    name, eq, rest = spec.partition("=")
+    fdir, colon, fw = rest.rpartition(":")
+    try:
+        weight = float(fw) if colon else None
+    except ValueError:
+        weight = None
+    if weight is not None and not math.isfinite(weight):
+        weight = None
+    if not eq or not name or not fdir or weight is None:
+        p.error(
+            f"--field-index must be NAME=DIR:WEIGHT with a numeric "
+            f"weight, e.g. path=/idx/path:2.0 (got {spec!r})"
+        )
+    return name, fdir, weight
 
 
 _MODES = {"EXACT": "EXACT_MATCH", "PREFIX": "START_WITH",
@@ -135,7 +156,7 @@ def main(argv=None) -> int:
     )
     mf.add_argument("--index", required=True, help="content-field index")
     mf.add_argument("--field-index", required=True,
-                    help="NAME=DIR[:WEIGHT] for the second field, "
+                    help="NAME=DIR:WEIGHT for the second field, "
                          "e.g. path=/idx/path:2.0")
     mf.add_argument("--weight", type=float, default=1.0,
                     help="weight of the content field")
@@ -259,6 +280,11 @@ def main(argv=None) -> int:
         (args.queries is None) == (args.queries_file is None)
     ):
         p.error("search-many needs exactly one of --queries / --queries-file")
+    field = (
+        _parse_field_index(p, args.field_index)
+        if args.cmd == "multifield"
+        else None
+    )
     qset = None
     if args.cmd == "search-many":
         # parse + normalize the query set NOW: a malformed JSON string,
@@ -363,12 +389,10 @@ def main(argv=None) -> int:
     if args.cmd == "multifield":
         from .query import IndexReader, search_multifield
 
-        spec = args.field_index
-        name, rest = spec.split("=", 1)
-        fdir, _, fw = rest.partition(":")
+        name, fdir, fw = field
         readers = {
             "content": (rd, float(args.weight)),
-            name: (IndexReader(spark, fdir), float(fw) if fw else 2.0),
+            name: (IndexReader(spark, fdir), fw),
         }
         terms = [t for t in args.terms.split(",") if t]
         res = search_multifield(readers, terms, k=args.k)

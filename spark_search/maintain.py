@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .build import BLOCKS_SCHEMA, PLISTS_SCHEMA, build_index
 from .checkpoint import BuildManifest
-from .codec import decode_block, encode_blocks
+from .codec import decode_blocks, encode_blocks
 from .ids import with_doc_ids
 from .stats import CorpusStats
 
@@ -115,25 +115,12 @@ def _filter_block_rows(blks, drop, block_size):
     Returns (n_docs, sum_tf, max_tf, out_blocks, rem_ids, rem_tfs) —
     the shared kernel of delete_term_postings' and compact's rewrite
     UDFs (one copy; a codec change lands once)."""
-    ids_all, tfs_all, rem_ids, rem_tfs = [], [], [], []
-    for b in blks:
-        ids, tfs = decode_block(
-            int(b["first_doc"]), bytes(b["deltas"]), bytes(b["tfs"])
-        )
-        hit = np.isin(ids, drop)
-        if hit.any():
-            rem_ids.append(ids[hit])
-            rem_tfs.append(tfs[hit])
-        keep = ~hit
-        if keep.any():
-            ids_all.append(ids[keep])
-            tfs_all.append(tfs[keep])
-    r_ids = np.concatenate(rem_ids) if rem_ids else np.empty(0, np.int64)
-    r_tfs = np.concatenate(rem_tfs) if rem_tfs else np.empty(0, np.int64)
-    if not ids_all:
+    ids, tfs = decode_blocks(blks)
+    hit = np.isin(ids, drop)
+    r_ids, r_tfs = ids[hit], tfs[hit]
+    ids, tfs = ids[~hit], tfs[~hit]
+    if ids.size == 0:
         return 0, 0, 0, [], r_ids, r_tfs
-    ids = np.concatenate(ids_all)
-    tfs = np.concatenate(tfs_all)
     enc = encode_blocks(ids, tfs, block_size=block_size)
     out_blocks = [
         {

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .build import BLOCKS_SCHEMA, PLISTS_SCHEMA, IndexPaths
 from .checkpoint import BuildManifest
-from .codec import encode_blocks_batch, varint_decode
+from .codec import decode_blocks, encode_blocks_batch
 from .maintain import _multi
 from .progress import dir_bytes
 from .stats import CorpusStats
@@ -143,8 +143,7 @@ def _merge_postings_udf(block_size: int, has_plists: bool):
     def merge_srcs(srcs: pd.Series) -> pd.DataFrame:
         # Batch-vectorized across the whole Arrow batch (the codec's
         # encode_blocks_batch pattern, applied to decode+merge too):
-        # one varint decode over ALL blocks' concatenated buffers, one
-        # segment-cumsum to materialize doc ids, one lexsort to
+        # one decode_blocks call over ALL blocks, one lexsort to
         # merge-sort every group at once, one batched re-encode. The
         # per-group Python loop below touches only metadata lists —
         # measured necessary: the bench's interleaved sf0.1 split puts
@@ -160,41 +159,24 @@ def _merge_postings_udf(block_size: int, has_plists: bool):
             if has_plists:
                 data["plists"] = []
             return pd.DataFrame(data)
-        first_docs: list = []
-        ns: list = []
-        d_bufs: list = []
-        t_bufs: list = []
+        blks: list = []
         g_of_block: list = []
         plists_out: list = []
         for gi, group in enumerate(srcs):
             pl: list = []
             for src in group:
-                for b in src["blocks"]:
-                    first_docs.append(int(b["first_doc"]))
-                    ns.append(int(b["n"]))
-                    d_bufs.append(bytes(b["deltas"]))
-                    t_bufs.append(bytes(b["tfs"]))
-                    g_of_block.append(gi)
+                blks.extend(src["blocks"])
+                g_of_block.extend([gi] * len(src["blocks"]))
                 if has_plists and src["plists"] is not None:
                     pl.extend(src["plists"])
             if has_plists:
                 plists_out.append(
                     sorted(pl, key=lambda e: int(e["doc_id"]))
                 )
-        ns_arr = np.asarray(ns, dtype=np.int64)
-        # LEB128 is self-delimiting: decoding the concatenation yields
-        # exactly sum(ns) values in block order
-        vals = varint_decode(b"".join(d_bufs)).astype(np.int64)
-        tfs = varint_decode(b"".join(t_bufs)).astype(np.int64)
-        starts = np.zeros(ns_arr.size, dtype=np.int64)
-        np.cumsum(ns_arr[:-1], out=starts[1:])
-        vals[starts] = first_docs  # encoded first delta is 0
-        cum = np.cumsum(vals)
-        prev = np.empty_like(cum)
-        prev[0] = 0
-        prev[1:] = cum[:-1]
-        doc_ids = cum - np.repeat(prev[starts], ns_arr)
-        g = np.repeat(np.asarray(g_of_block, dtype=np.int64), ns_arr)
+        doc_ids, tfs = decode_blocks(blks)
+        g = np.repeat(
+            np.asarray(g_of_block, dtype=np.int64), [b["n"] for b in blks]
+        )
         order = np.lexsort((doc_ids, g))
         doc_ids, tfs = doc_ids[order], tfs[order]
         counts = np.bincount(g, minlength=n_groups)

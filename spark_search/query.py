@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .build import IndexPaths, bucket_col
 from .checkpoint import BuildManifest
-from .codec import decode_block, decode_positions
+from .codec import decode_blocks, decode_positions
 from .pipeline import (
     AND_MATCH,
     B,
@@ -218,6 +218,81 @@ def _score_np(tf: np.ndarray, dl: np.ndarray, idf: float, avgdl: float) -> np.nd
 
 def _idf(n_docs: float, df: float) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+# ------------------------------------------------ chunk-scoring kernel
+# Every BM25 path (distributed search, batched search_many and its
+# wide-prefix fallback, the driver-local fast path, the θ bootstrap)
+# scores a chunk with these two functions. Callers feed terms in SORTED
+# order: float addition is not associative, so one accumulation order
+# everywhere is what keeps every path's scores bit-identical.
+
+
+def _term_contrib(blocks, idf, dls, base, avgdl, theta=0.0, rest=0.0):
+    """Per-term step: one term's blocks in one chunk -> (pos, contrib),
+    chunk-local doc positions and their BM25 contributions. With
+    ``theta`` > 0 a block whose max-tf bound plus ``rest`` (the other
+    terms' chunk-level bounds) cannot beat θ is skipped undecoded
+    (block-max pruning). A term's positions are unique, so adding
+    ``contrib`` at ``pos`` in one fancy-index step is exact."""
+    if theta > 0.0:
+        blocks = [
+            b for b in blocks
+            if _term_ub(idf, int(b["max_tf"])) + rest > theta
+        ]
+    doc_ids, tfs = decode_blocks(blocks)
+    pos = doc_ids - base
+    return pos, _score_np(tfs.astype(np.float64), dls[pos], idf, avgdl)
+
+
+def _chunk_hits(parts, size, base, dels=None, allow=None, need=None, loc_k=None):
+    """Finish step: accumulate the per-term ``(pos, contrib)`` parts (in
+    the caller's sorted-term order) over a chunk of ``size`` positions,
+    then drop tombstoned doc ids (``dels``) and positions outside the
+    allow-list, keep only docs matching ``need`` terms (AND), and cut
+    to the ``loc_k`` best — ties with the k-th score are all kept, so a
+    global merge of the chunk winners stays exact. Returns (hit
+    positions, scores, counts)."""
+    scores = np.zeros(size, dtype=np.float64)
+    counts = np.zeros(size, dtype=np.int32)
+    for pos, contrib in parts:
+        scores[pos] += contrib
+        counts[pos] += 1
+    if dels is not None and len(dels):
+        dp = np.asarray(dels, dtype=np.int64) - base
+        counts[dp[(dp >= 0) & (dp < size)]] = 0  # tombstones never match
+    if allow is not None:
+        ap = np.asarray(allow, dtype=np.int64)
+        ok = np.zeros(size, dtype=bool)
+        ok[ap[ap < size]] = True
+        counts[~ok] = 0  # docs outside the filter never match
+    hit = np.flatnonzero(counts)
+    if need is not None:
+        hit = hit[counts[hit] == need]
+    if loc_k is not None and hit.size > loc_k:
+        sc = scores[hit]
+        kth = np.partition(sc, sc.size - loc_k)[sc.size - loc_k]
+        hit = hit[sc >= kth]
+    return hit, scores, counts
+
+
+def _open_chunk(pdf: pd.DataFrame, span: int):
+    """A chunk group's kernel inputs -> (dls, base, rows sorted by term).
+    Rows are sorted because the group's row order after a shuffle is
+    not guaranteed, and the kernel's accumulation order must be."""
+    chunk = int(pdf["chunk"].iloc[0])
+    dls = np.frombuffer(pdf["_dls"].iloc[0], dtype=np.int32).astype(np.float64)
+    return dls, chunk * span, pdf.sort_values("term", kind="mergesort")
+
+
+def _meta_literal(spark: SparkSession, head: List[dict]) -> DataFrame:
+    """Collected term metadata (term, idf, term_ub) as a pure-JVM
+    literal plan — no Python-RDD parallelize, no metadata scan job."""
+    return _rows_literal_df(
+        spark,
+        [(h["term"], h["idf"], h["term_ub"]) for h in head],
+        [("term", "string"), ("idf", "double"), ("term_ub", "double")],
+    )
 
 
 def _levenshtein_within(a: str, b: str, max_dist: int) -> bool:
@@ -451,6 +526,77 @@ class IndexReader:
             .agg(F.sort_array(F.collect_list("pos")).alias("_allow"))
         )
 
+    def _term_meta(self, qterms: List[str], mode: str, pred):
+        """Dictionary expansion of ``qterms`` (whose postings/terms
+        predicate is ``pred``) + per-term idf / upper bounds ->
+        (head, meta, buckets, n_matched, total_df).
+
+        With the cached dictionary (zero jobs), or an uncached expansion
+        small enough to collect in one job, ``head`` lists the matched
+        terms as dicts (term, df, max_tf, bucket, idf, term_ub) with
+        idf/ub computed driver-side in Python — the SAME floats every
+        scoring path consumes — and ``meta`` is None (the distributed
+        plan carries them via :func:`_meta_literal`). Past
+        ``_META_COLLECT_CAP`` a prefix can expand to millions of terms,
+        whose idf/ub must never become driver literals: ``head`` is
+        None, ``meta`` stays a distributed scan, and only the bucket
+        list (bounded by num_buckets) and the counters are collected.
+        ``total_df`` (Σ df, the gate of the θ bootstrap and the local
+        fast path) is None when only a job could tell it."""
+        stats = self.stats
+        cap = _META_COLLECT_CAP
+        expansion = self._dict_expand(qterms, mode)
+        if expansion is None:
+            meta = self._meta_scan_df(pred, stats)
+            raw = meta.limit(cap + 1).collect()
+            if len(raw) > cap:
+                info = meta.agg(
+                    F.count("*").alias("n"),
+                    F.collect_set("bucket").alias("buckets"),
+                ).collect()[0]
+                return (
+                    None, meta, sorted(info["buckets"] or []),
+                    int(info["n"]), None,
+                )
+            expansion = [
+                (r["term"], int(r["df"]), int(r["max_tf"]), int(r["bucket"]))
+                for r in raw
+            ]
+        buckets = sorted({b for _, _, _, b in expansion})
+        total_df = sum(df_ for _, df_, _, _ in expansion)
+        if len(expansion) > cap:
+            meta = self._meta_scan_df(pred, stats)
+            return None, meta, buckets, len(expansion), total_df
+        head = []
+        for t, df_, mtf_, b_ in expansion:
+            idf = _idf(float(stats.n_docs), float(df_))
+            head.append(
+                {
+                    "term": t, "df": df_, "max_tf": mtf_, "bucket": b_,
+                    "idf": idf, "term_ub": _term_ub(idf, mtf_),
+                }
+            )
+        return head, None, buckets, len(head), total_df
+
+    def _with_chunk_state(
+        self, post: DataFrame, allow: Optional[DataFrame] = None
+    ) -> DataFrame:
+        """Join each chunk's kernel inputs onto its postings rows: the
+        doclens array (``_dls``), the tombstoned ids (``_dels``, null
+        when none) and, under a membership filter, the allowed
+        positions (``_allow``; the inner join drops chunks with none)."""
+        joined = post.join(
+            self.doclens_df().withColumnRenamed("dls", "_dls"), "chunk"
+        )
+        dels_by_chunk = self._dels_by_chunk()
+        if dels_by_chunk is not None:
+            joined = joined.join(dels_by_chunk, "chunk", "left")
+        else:
+            joined = joined.withColumn(
+                "_dels", F.lit(None).cast("array<long>")
+            )
+        return joined if allow is None else joined.join(allow, "chunk")
+
     def _meta_scan_df(self, pred, stats) -> DataFrame:
         """Distributed per-term metadata (df, max_tf, bucket, idf,
         term_ub) for expansions too wide to collect — Spark-side idf/ub
@@ -680,11 +826,7 @@ class IndexReader:
                 v = None
                 for b in blks:
                     if int(b["first_doc"]) <= target <= int(b["last_doc"]):
-                        ids, tfs = decode_block(
-                            int(b["first_doc"]),
-                            bytes(b["deltas"]),
-                            bytes(b["tfs"]),
-                        )
+                        ids, tfs = decode_blocks([b])
                         i = int(np.searchsorted(ids, target))
                         if i < ids.size and ids[i] == target:
                             v = int(tfs[i])
@@ -766,84 +908,12 @@ class IndexReader:
         if not qterms:
             return empty
 
-        # ---- term metadata. With the cached dictionary the expansion
-        # (incl. idf / upper bounds, computed driver-side in python —
-        # the SAME floats both the local fast path and the distributed
-        # scorer consume) costs zero jobs. Past the vocab cache gate, a
-        # prefix query can expand to millions of dictionary terms at
-        # corpus scale; their idf/ub must never become driver-side
-        # literals — only the *bucket list* (bounded by num_buckets)
-        # and two counters are ever collected on that path.
-        stats = self.stats
         pred = _term_predicate(qterms, mode)
-        cap = _META_COLLECT_CAP
-        meta: Optional[DataFrame] = None
-        expansion = self._dict_expand(qterms, mode)
-        if expansion is not None and len(expansion) <= cap:
-            head: List[dict] = []
-            for t, df_, mtf_, b_ in expansion:
-                idf = _idf(float(stats.n_docs), float(df_))
-                head.append(
-                    {
-                        "term": t, "df": df_, "max_tf": mtf_, "bucket": b_,
-                        "idf": idf, "term_ub": _term_ub(idf, mtf_),
-                    }
-                )
-            n_matched = len(head)
-            buckets = sorted({int(r["bucket"]) for r in head})
-            total_df = sum(int(r["df"]) for r in head)
-        elif expansion is not None:
-            # dictionary cached but the expansion is too wide to carry
-            # as plan literals: keep the driver-side gating counters
-            # (total_df IS in hand — it gates the theta bootstrap and
-            # the local fast path for free), compute per-term idf/ub
-            # distributed (scan + expressions)
-            head = []
-            n_matched = len(expansion)
-            buckets = sorted({b for _, _, _, b in expansion})
-            total_df = sum(df_ for _, df_, _, _ in expansion)
-            meta = self._meta_scan_df(pred, stats)
-        else:
-            meta = self._meta_scan_df(pred, stats)
-            # Collect the expansion in ONE job when it is small; use the
-            # total matched-postings count to decide whether block-max
-            # pruning (whose θ bootstrap costs extra jobs) will pay for
-            # itself. Expansions past the cap keep the fully-distributed
-            # path (metadata never collected).
-            raw = meta.limit(cap + 1).collect()
-            total_df = None
-            head = []
-            if len(raw) <= cap:
-                for r in raw:
-                    idf = _idf(float(stats.n_docs), float(r["df"]))
-                    head.append(
-                        {
-                            "term": r["term"], "df": int(r["df"]),
-                            "max_tf": int(r["max_tf"]),
-                            "bucket": int(r["bucket"]), "idf": idf,
-                            "term_ub": _term_ub(idf, int(r["max_tf"])),
-                        }
-                    )
-                n_matched = len(head)
-                buckets = sorted({int(r["bucket"]) for r in head})
-                total_df = sum(int(r["df"]) for r in head)
-                meta = None
-            else:
-                info = meta.agg(
-                    F.count("*").alias("n"),
-                    F.collect_set("bucket").alias("buckets"),
-                ).collect()[0]
-                n_matched, buckets = int(info["n"]), sorted(info["buckets"] or [])
+        head, meta, buckets, n_matched, total_df = self._term_meta(
+            qterms, mode, pred
+        )
         if n_matched == 0 or (mode == AND_MATCH and n_matched < n_query_terms):
             return empty
-        if meta is None:
-            # bounded-size metadata as a pure-JVM literal plan (broadcast
-            # below) — no Python-RDD parallelize, no metadata scan job
-            meta = _rows_literal_df(
-                self.spark,
-                [(r["term"], r["idf"], r["term_ub"]) for r in head],
-                [("term", "string"), ("idf", "double"), ("term_ub", "double")],
-            )
 
         if (
             local_max_postings
@@ -860,6 +930,8 @@ class IndexReader:
             )
             if out is not None:
                 return out
+        if meta is None:
+            meta = _meta_literal(self.spark, head)
 
         # postings scan: bucket partition pruning + the original (small)
         # term predicate pushed to parquet; idf/ub arrive via the join
@@ -901,26 +973,17 @@ class IndexReader:
             )
             post = post.join(F.broadcast(w_n), "chunk")
 
-        joined = post.join(
-            self.doclens_df().withColumnRenamed("dls", "_dls"), "chunk"
-        )
-        dels_by_chunk = self._dels_by_chunk()
-        if dels_by_chunk is not None:
-            joined = joined.join(dels_by_chunk, "chunk", "left")
-        else:
-            joined = joined.withColumn(
-                "_dels", F.lit(None).cast("array<long>")
-            )
         has_allow = (
             doc_filter is not None or bool(excl) or bool(_require_docs)
         )
-        if has_allow:
-            joined = joined.join(
-                self._allow_by_chunk(doc_filter, excl, _require_docs),
-                "chunk",
-            )
+        joined = self._with_chunk_state(
+            post,
+            self._allow_by_chunk(doc_filter, excl, _require_docs)
+            if has_allow
+            else None,
+        )
 
-        avgdl = stats.avgdl
+        avgdl = self.stats.avgdl
         span = self.chunk_span
         # grouped/cursored modes keep the chunk's WHOLE hit set: a
         # chunk-local global-score cut could drop a small group's best
@@ -929,73 +992,29 @@ class IndexReader:
         loc_k = (
             k
             if (_group is None and _after is None and not _scored)
-            else (1 << 62)
+            else None
         )
-        n_query = n_query_terms
 
         def score_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pd.DataFrame(
-                    {"doc_id": [], "score": [], "nterms": []}
-                ).astype({"doc_id": "int64", "score": "float64", "nterms": "int32"})
-            chunk = int(pdf["chunk"].iloc[0])
-            dls = np.frombuffer(pdf["_dls"].iloc[0], dtype=np.int32).astype(
-                np.float64
-            )
-            scores = np.zeros(dls.size, dtype=np.float64)
-            counts = np.zeros(dls.size, dtype=np.int32)
-            base = chunk * span
-            # sorted by term: deterministic float accumulation order —
-            # within-group row order after a shuffle is NOT guaranteed,
-            # and float addition is not associative; sorting pins this
-            # path 1-ulp-identical to _search_local and search_many
-            pdf = pdf.sort_values("term", kind="mergesort").reset_index(
-                drop=True
-            )
-            # rest_ub[i]: chunk-level ub of every row except i — the
-            # slack available from other terms when testing row i's blocks
+            dls, base, pdf = _open_chunk(pdf, span)
+            # each term's block-max slack is the chunk-level ub of every
+            # OTHER query term in the chunk
             ubs = pdf["term_ub"].to_numpy(dtype=np.float64)
             total_ub = float(ubs.sum())
-            for i in range(len(pdf)):
-                t_idf = float(pdf["idf"].iloc[i])
-                rest = total_ub - float(ubs[i])
-                for blk in pdf["blocks"].iloc[i]:
-                    if theta > 0.0:
-                        blk_ub = _term_ub(t_idf, int(blk["max_tf"]))
-                        if blk_ub + rest <= theta:
-                            continue  # block-max skip
-                    doc_ids, tfs = decode_block(
-                        int(blk["first_doc"]), bytes(blk["deltas"]), bytes(blk["tfs"])
-                    )
-                    pos = doc_ids - base
-                    scores[pos] += _score_np(
-                        tfs.astype(np.float64), dls[pos], t_idf, avgdl
-                    )
-                    counts[pos] += 1
-            dels_val = pdf["_dels"].iloc[0]
-            if dels_val is not None and len(dels_val):
-                dp = np.asarray(dels_val, dtype=np.int64) - base
-                dp = dp[(dp >= 0) & (dp < counts.size)]
-                counts[dp] = 0  # tombstoned docs never match
-            if has_allow:
-                ap = np.asarray(pdf["_allow"].iloc[0], dtype=np.int64)
-                ok = np.zeros(counts.size, dtype=bool)
-                ok[ap[ap < counts.size]] = True
-                counts[~ok] = 0  # docs outside the filter never match
-            hit = np.flatnonzero(counts)
-            if need_all:
-                hit = hit[counts[hit] == n_query]
-            if hit.size == 0:
-                return pd.DataFrame(
-                    {"doc_id": [], "score": [], "nterms": []}
-                ).astype({"doc_id": "int64", "score": "float64", "nterms": "int32"})
-            if hit.size > loc_k:
-                # local bounded top-k: keep the loc_k best (ties kept by
-                # taking extras with equal score so the global merge stays
-                # exact)
-                sc = scores[hit]
-                kth = np.partition(sc, sc.size - loc_k)[sc.size - loc_k]
-                hit = hit[sc >= kth]
+            parts = [
+                _term_contrib(
+                    blocks, float(idf), dls, base, avgdl,
+                    theta, total_ub - float(ub),
+                )
+                for blocks, idf, ub in zip(pdf["blocks"], pdf["idf"], ubs)
+            ]
+            hit, scores, counts = _chunk_hits(
+                parts, dls.size, base,
+                dels=pdf["_dels"].iloc[0],
+                allow=pdf["_allow"].iloc[0] if has_allow else None,
+                need=n_query_terms if need_all else None,
+                loc_k=loc_k,
+            )
             return pd.DataFrame(
                 {
                     "doc_id": (hit + base).astype("int64"),
@@ -1298,58 +1317,14 @@ class IndexReader:
             return empty
         union_terms = sorted({t for _, t in pairs})
 
-        stats = self.stats
         pred = _term_predicate(union_terms, mode)
-        expansion = self._dict_expand(union_terms, mode)
-        meta: Optional[DataFrame] = None
-        buckets: Optional[List[int]] = None
-        expanded_terms: Optional[List[str]] = None
-        if expansion is not None and len(expansion) <= _META_COLLECT_CAP:
-            if not expansion:
-                return empty
-            rows = []
-            for t, df_, mtf_, b_ in expansion:
-                idf = _idf(float(stats.n_docs), float(df_))
-                rows.append((t, idf, _term_ub(idf, mtf_)))
-            buckets = sorted({b for _, _, _, b in expansion})
-            expanded_terms = [t for t, _, _, _ in expansion]
-            meta = _rows_literal_df(
-                self.spark, rows,
-                [("term", "string"), ("idf", "double"), ("term_ub", "double")],
-            )
-        elif expansion is not None:
-            # cached dictionary, expansion too wide for plan literals:
-            # bucket list still bounded driver-side; idf/ub distributed
-            buckets = sorted({b for _, _, _, b in expansion})
-            meta = self._meta_scan_df(pred, stats)
-        else:
-            # no cached dictionary: same two-tier bootstrap as search()
-            # — collect the expansion in ONE job when it is small so the
-            # idf/ub floats are the SAME driver-computed values (Python
-            # math.log) search() would use (bit-identical contract);
-            # wider expansions keep idf distributed and collect only the
-            # bounded bucket list
-            meta = self._meta_scan_df(pred, stats)
-            raw = meta.limit(_META_COLLECT_CAP + 1).collect()
-            if not raw:
-                return empty
-            if len(raw) <= _META_COLLECT_CAP:
-                rows = []
-                for r in raw:
-                    idf = _idf(float(stats.n_docs), float(r["df"]))
-                    rows.append((r["term"], idf, _term_ub(idf, int(r["max_tf"]))))
-                buckets = sorted({int(r["bucket"]) for r in raw})
-                expanded_terms = [r["term"] for r in raw]
-                meta = _rows_literal_df(
-                    self.spark, rows,
-                    [("term", "string"), ("idf", "double"),
-                     ("term_ub", "double")],
-                )
-            else:
-                info = meta.agg(
-                    F.collect_set("bucket").alias("buckets")
-                ).collect()[0]
-                buckets = sorted(info["buckets"] or [])
+        head, meta, buckets, n_matched, _ = self._term_meta(
+            union_terms, mode, pred
+        )
+        if n_matched == 0:
+            return empty
+        if meta is None:
+            meta = _meta_literal(self.spark, head)
 
         # term -> [query_ids]: when this map is derivable driver-side
         # (always for exact/OR/AND — the terms ARE the input; for
@@ -1364,14 +1339,14 @@ class IndexReader:
             q_by_term = {}
             for qid, t in pairs:
                 q_by_term.setdefault(t, []).append(qid)
-        elif expanded_terms is not None:
+        elif head is not None:
             q_by_term = {}
             hits = (
                 (lambda t, q: t.startswith(q))
                 if mode == START_WITH
                 else (lambda t, q: q in t)
             )
-            for t in expanded_terms:
+            for t in (h["term"] for h in head):
                 qids = list(
                     dict.fromkeys(
                         qid for qid, pfx in pairs if hits(t, pfx)
@@ -1409,23 +1384,13 @@ class IndexReader:
         else:
             post = post.join(F.broadcast(meta.select("term", "idf")), "term")
 
-        joined = post.join(
-            self.doclens_df().withColumnRenamed("dls", "_dls"), "chunk"
-        )
-        dels_by_chunk = self._dels_by_chunk()
-        if dels_by_chunk is not None:
-            joined = joined.join(dels_by_chunk, "chunk", "left")
-        else:
-            joined = joined.withColumn(
-                "_dels", F.lit(None).cast("array<long>")
-            )
         has_allow = doc_filter is not None
-        if has_allow:
-            joined = joined.join(self._allow_by_chunk(doc_filter), "chunk")
+        joined = self._with_chunk_state(
+            post, self._allow_by_chunk(doc_filter) if has_allow else None
+        )
 
-        avgdl = stats.avgdl
+        avgdl = self.stats.avgdl
         span = self.chunk_span
-        loc_k = k
         # AND semantics must gate BEFORE the per-chunk top-k cut (as in
         # search()'s kernel): a high-scoring partial match must never
         # evict a complete match from a chunk's k survivors. The map is
@@ -1436,39 +1401,14 @@ class IndexReader:
             else None
         )
 
-        _EMPTY_OUT = {
-            "query_id": "object", "doc_id": "int64",
-            "score": "float64", "nterms": "int32",
-        }
-
-        def _empty_many_out() -> pd.DataFrame:
-            """Typed zero-row frame both kernels return — one
-            definition so a schema change cannot drift between the
-            five call sites inside the serialized closures."""
-            return pd.DataFrame({c: [] for c in _EMPTY_OUT}).astype(_EMPTY_OUT)
-
-        def _finish_query(qid, scores, counts, dels_val, allow_val, base):
-            """Shared tail of both kernels: tombstone/filter zeroing,
-            AND gating, bounded tie-kept top-k — identical arithmetic
-            to search()'s score_chunk."""
-            if dels_val is not None and len(dels_val):
-                dp = np.asarray(dels_val, dtype=np.int64) - base
-                dp = dp[(dp >= 0) & (dp < counts.size)]
-                counts[dp] = 0
-            if allow_val is not None:
-                ap = np.asarray(allow_val, dtype=np.int64)
-                ok = np.zeros(counts.size, dtype=bool)
-                ok[ap[ap < counts.size]] = True
-                counts[~ok] = 0
-            hit = np.flatnonzero(counts)
-            if need_map is not None:
-                hit = hit[counts[hit] == need_map[qid]]
-            if hit.size == 0:
-                return None
-            if hit.size > loc_k:
-                sc = scores[hit]
-                kth = np.partition(sc, sc.size - loc_k)[sc.size - loc_k]
-                hit = hit[sc >= kth]
+        def _query_rows(qid, parts, dls, base, pdf) -> pd.DataFrame:
+            hit, scores, counts = _chunk_hits(
+                parts, dls.size, base,
+                dels=pdf["_dels"].iloc[0],
+                allow=pdf["_allow"].iloc[0] if has_allow else None,
+                need=need_map[qid] if need_map is not None else None,
+                loc_k=k,
+            )
             return pd.DataFrame(
                 {
                     "query_id": qid,
@@ -1479,122 +1419,50 @@ class IndexReader:
             )
 
         def score_chunk_shared(pdf: pd.DataFrame) -> pd.DataFrame:
-            """One chunk, ALL queries: decode each term's blocks ONCE
-            into sparse (pos, contrib) arrays, then score queries one
-            at a time against two REUSED span buffers.
+            """One chunk, ALL queries: decode and score each term's
+            blocks ONCE into sparse (pos, contrib) arrays, then finish
+            the queries one at a time from those arrays.
 
             Memory shape: the decode pass holds O(postings-in-chunk)
             — the same rows the Arrow batch already carries, in decoded
-            form — while the scoring pass holds exactly ONE scores +
-            counts span pair regardless of batch size. The obvious
+            form — while the finish pass holds ONE scores + counts span
+            pair at a time regardless of batch size. The obvious
             alternative (a span pair per query, filled during the term
             fan-out) is O(|queries| x chunk_span) per task — ~100 MB
             transient per task slot at 500 registered queries — which
-            defeats the kernel's own many-queries purpose.
-
-            Bit-identity: a term's postings positions are unique within
-            the term (blocks partition the docID range), so the single
-            fancy-index add per (query, term) applies each position's
-            contribution exactly once, in sorted-term order — the same
-            float accumulation order as search()'s kernel,
-            _search_local, and the per-(query, chunk) fallback."""
-            if pdf.empty:
-                return _empty_many_out()
-            chunk = int(pdf["chunk"].iloc[0])
-            dls = np.frombuffer(pdf["_dls"].iloc[0], dtype=np.int32).astype(
-                np.float64
-            )
-            base = chunk * span
-            # sorted by term: each query's terms then accumulate in
-            # sorted order — the same deterministic float addition order
-            # as search()'s kernel and _search_local (bit-identical)
-            pdf = pdf.sort_values("term", kind="mergesort").reset_index(
-                drop=True
-            )
+            defeats the kernel's own many-queries purpose. Each query
+            accumulates its terms' parts in sorted-term order, so scores
+            are bit-identical to search()."""
+            dls, base, pdf = _open_chunk(pdf, span)
             decoded: List[Tuple[np.ndarray, np.ndarray]] = []
             terms_by_q: Dict[str, List[int]] = {}
-            for i in range(len(pdf)):
-                qids = q_by_term.get(pdf["term"].iloc[i])
-                if not qids:
-                    continue
-                t_idf = float(pdf["idf"].iloc[i])
-                pos_parts: List[np.ndarray] = []
-                contrib_parts: List[np.ndarray] = []
-                for blk in pdf["blocks"].iloc[i]:
-                    doc_ids, tfs = decode_block(
-                        int(blk["first_doc"]), bytes(blk["deltas"]),
-                        bytes(blk["tfs"]),
-                    )
-                    pos = doc_ids - base
-                    pos_parts.append(pos)
-                    contrib_parts.append(
-                        _score_np(tfs.astype(np.float64), dls[pos], t_idf, avgdl)
-                    )
-                ti = len(decoded)
+            # the postings scan and the metadata join admit only batch
+            # terms, so every row's term maps to >= 1 query
+            for term, blocks, idf in zip(pdf["term"], pdf["blocks"], pdf["idf"]):
+                for qid in q_by_term[term]:
+                    terms_by_q.setdefault(qid, []).append(len(decoded))
                 decoded.append(
-                    (np.concatenate(pos_parts), np.concatenate(contrib_parts))
-                    if len(pos_parts) != 1
-                    else (pos_parts[0], contrib_parts[0])
+                    _term_contrib(blocks, float(idf), dls, base, avgdl)
                 )
-                for qid in qids:
-                    terms_by_q.setdefault(qid, []).append(ti)
-            dels_val = pdf["_dels"].iloc[0]
-            allow_val = pdf["_allow"].iloc[0] if has_allow else None
-            scores = np.zeros(dls.size, dtype=np.float64)
-            counts = np.zeros(dls.size, dtype=np.int32)
-            outs = []
-            for qid in sorted(terms_by_q):
-                scores.fill(0.0)
-                counts.fill(0)
-                for ti in terms_by_q[qid]:
-                    pos, contrib = decoded[ti]
-                    scores[pos] += contrib
-                    counts[pos] += 1
-                out = _finish_query(
-                    qid, scores, counts, dels_val, allow_val, base
-                )
-                if out is not None:
-                    outs.append(out)
-            if not outs:
-                return _empty_many_out()
-            return pd.concat(outs, ignore_index=True)
+            return pd.concat(
+                [
+                    _query_rows(
+                        qid, [decoded[ti] for ti in terms_by_q[qid]],
+                        dls, base, pdf,
+                    )
+                    for qid in sorted(terms_by_q)
+                ],
+                ignore_index=True,
+            )
 
         def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
             """Fallback kernel: one (query_id, chunk) group per call."""
-            if pdf.empty:
-                return _empty_many_out()
-            qid = pdf["query_id"].iloc[0]
-            chunk = int(pdf["chunk"].iloc[0])
-            dls = np.frombuffer(pdf["_dls"].iloc[0], dtype=np.int32).astype(
-                np.float64
-            )
-            scores = np.zeros(dls.size, dtype=np.float64)
-            counts = np.zeros(dls.size, dtype=np.int32)
-            base = chunk * span
-            # sorted by term: same deterministic accumulation order as
-            # search()'s kernel and _search_local — scores bit-identical
-            pdf = pdf.sort_values("term", kind="mergesort").reset_index(
-                drop=True
-            )
-            for i in range(len(pdf)):
-                t_idf = float(pdf["idf"].iloc[i])
-                for blk in pdf["blocks"].iloc[i]:
-                    doc_ids, tfs = decode_block(
-                        int(blk["first_doc"]), bytes(blk["deltas"]),
-                        bytes(blk["tfs"]),
-                    )
-                    pos = doc_ids - base
-                    scores[pos] += _score_np(
-                        tfs.astype(np.float64), dls[pos], t_idf, avgdl
-                    )
-                    counts[pos] += 1
-            out = _finish_query(
-                qid, scores, counts, pdf["_dels"].iloc[0],
-                pdf["_allow"].iloc[0] if has_allow else None, base,
-            )
-            if out is None:
-                return _empty_many_out()
-            return out
+            dls, base, pdf = _open_chunk(pdf, span)
+            parts = [
+                _term_contrib(blocks, float(idf), dls, base, avgdl)
+                for blocks, idf in zip(pdf["blocks"], pdf["idf"])
+            ]
+            return _query_rows(pdf["query_id"].iloc[0], parts, dls, base, pdf)
 
         if q_by_term is not None:
             local = joined.groupBy("chunk").applyInPandas(
@@ -1620,8 +1488,8 @@ class IndexReader:
         """Small-query fast path: score the (proven-small) matched
         postings driver-side. Two scan jobs — postings rows with the
         term predicate + bucket pruning pushed to parquet, then the
-        doclen chunks those rows touch — and pure numpy after that.
-        Accumulation order and arithmetic match score_chunk exactly.
+        doclen chunks those rows touch — then the shared chunk kernel in
+        numpy, so scores equal the distributed plan's exactly.
         Returns None (caller falls back to the distributed plan) if the
         touched-chunk count would exceed the driver-memory gate."""
         empty = self.spark.createDataFrame([], RESULT_SCHEMA)
@@ -1639,56 +1507,31 @@ class IndexReader:
         if len(chunks) > _LOCAL_MAX_CHUNKS:
             return None
         dls_by_chunk = self._doclens_for(chunks)
-        dels_by_chunk = self._dels_cached()
-        if dels_by_chunk is None:  # uncacheably many tombstones
-            dels_by_chunk = {}
-            dbc = self._dels_by_chunk()
-            if dbc is not None:
-                for r in dbc.where(F.col("chunk").isin(chunks)).collect():
-                    dels_by_chunk[int(r["chunk"])] = np.asarray(
-                        r["_dels"], dtype=np.int64
-                    )
-
+        dels_by_chunk = self._dels_for(chunks)
+        by_chunk: Dict[int, list] = {}
+        for r in sorted(rows, key=lambda x: x["term"]):
+            by_chunk.setdefault(int(r["chunk"]), []).append(r)
         span = self.chunk_span
         avgdl = self.stats.avgdl
-        need_all = mode == AND_MATCH
         out_ids: List[np.ndarray] = []
         out_scores: List[np.ndarray] = []
-        by_chunk: Dict[int, list] = {}
-        for r in rows:
-            by_chunk.setdefault(int(r["chunk"]), []).append(r)
         for chunk in chunks:
             dls = dls_by_chunk.get(chunk)
             if dls is None:
                 continue
-            scores = np.zeros(dls.size, dtype=np.float64)
-            counts = np.zeros(dls.size, dtype=np.int32)
             base = chunk * span
-            # sorted by term: deterministic float accumulation order
-            for r in sorted(by_chunk[chunk], key=lambda x: x["term"]):
-                t_idf = idf_by_term[r["term"]]
-                for blk in r["blocks"]:
-                    doc_ids, tfs = decode_block(
-                        int(blk["first_doc"]),
-                        bytes(blk["deltas"]),
-                        bytes(blk["tfs"]),
-                    )
-                    pos = doc_ids - base
-                    scores[pos] += _score_np(
-                        tfs.astype(np.float64), dls[pos], t_idf, avgdl
-                    )
-                    counts[pos] += 1
-            dels = dels_by_chunk.get(chunk)
-            if dels is not None and dels.size:
-                dp = dels - base
-                dp = dp[(dp >= 0) & (dp < counts.size)]
-                counts[dp] = 0
-            hit = np.flatnonzero(counts)
-            if need_all:
-                hit = hit[counts[hit] == n_query_terms]
-            if hit.size:
-                out_ids.append((hit + base).astype(np.int64))
-                out_scores.append(scores[hit])
+            parts = [
+                _term_contrib(r["blocks"], idf_by_term[r["term"]], dls, base, avgdl)
+                for r in by_chunk[chunk]
+            ]
+            hit, scores, _ = _chunk_hits(
+                parts, dls.size, base,
+                dels=dels_by_chunk.get(chunk),
+                need=n_query_terms if mode == AND_MATCH else None,
+                loc_k=k,
+            )
+            out_ids.append(hit + base)
+            out_scores.append(scores[hit])
         if not out_ids:
             return empty
         ids = np.concatenate(out_ids)
@@ -1699,12 +1542,30 @@ class IndexReader:
             (int(ids[i]), float(sc[i]), rank + 1)
             for rank, i in enumerate(order)
         ]
-        return _rows_literal_df(self.spark, out, _RESULT_FIELDS)
+        return _rows_literal_df(self.spark, out, _RESULT_FIELDS) if out else empty
+
+    def _dels_for(self, chunks: List[int]) -> Dict[int, np.ndarray]:
+        """chunk -> tombstoned doc_ids for (at least) ``chunks``: the
+        driver cache when it holds, else one collect of those chunks'
+        rows of the tombstone join."""
+        cached = self._dels_cached()
+        if cached is not None:
+            return cached
+        dbc = self._dels_by_chunk()
+        if dbc is None:
+            return {}
+        return {
+            int(r["chunk"]): np.asarray(r["_dels"], dtype=np.int64)
+            for r in dbc.where(F.col("chunk").isin(chunks)).collect()
+        }
 
     def _bootstrap_theta(self, post: DataFrame, k: int) -> float:
-        """Decode the single most-promising chunk driver-side and return
-        its k-th best score (0 if it holds < k docs). One tiny collect —
-        bounded by (query terms × blocks-in-one-chunk)."""
+        """Score the single most-promising chunk driver-side and return
+        θ, the k-th best positive score among its live docs (0 if it
+        holds fewer than k). One tiny collect — bounded by (query terms
+        × blocks-in-one-chunk). Scored by the shared kernel in sorted-
+        term order, so θ is exactly a score the distributed kernel
+        reproduces for those docs."""
         agg = (
             post.groupBy("chunk")
             .agg(F.count("*").alias("m"))
@@ -1714,44 +1575,24 @@ class IndexReader:
         )
         if not agg:
             return 0.0
-        best_chunk = agg[0]["chunk"]
-        rows = post.where(F.col("chunk") == best_chunk).collect()
-        got = self._doclens_for([int(best_chunk)])
-        if int(best_chunk) not in got:
+        best = int(agg[0]["chunk"])
+        rows = post.where(F.col("chunk") == best).collect()
+        dls = self._doclens_for([best]).get(best)
+        if dls is None:
             return 0.0
-        dls = got[int(best_chunk)]
-        scores = np.zeros(dls.size, dtype=np.float64)
-        base = int(best_chunk) * self.chunk_span
-        deleted = np.empty(0, dtype=np.int64)
-        cached_dels = self._dels_cached()
-        if cached_dels is not None:
-            arr = cached_dels.get(int(best_chunk))
-            if arr is not None and arr.size:
-                dp = arr - base
-                deleted = dp[(dp >= 0) & (dp < dls.size)]
-        else:
-            dbc = self._dels_by_chunk()
-            if dbc is not None:
-                drow = dbc.where(F.col("chunk") == best_chunk).collect()
-                if drow:
-                    dp = np.asarray(drow[0]["_dels"], dtype=np.int64) - base
-                    deleted = dp[(dp >= 0) & (dp < dls.size)]
-        for r in rows:
-            t_idf = float(r["idf"])
-            for blk in r["blocks"]:
-                doc_ids, tfs = decode_block(
-                    int(blk["first_doc"]), bytes(blk["deltas"]), bytes(blk["tfs"])
-                )
-                pos = doc_ids - base
-                scores[pos] += _score_np(
-                    tfs.astype(np.float64), dls[pos], t_idf, self.stats.avgdl
-                )
-        if deleted.size:
-            scores[deleted] = 0.0  # a tombstone must not inflate θ
-        hit = scores[scores > 0]
-        if hit.size < k:
+        base = best * self.chunk_span
+        parts = [
+            _term_contrib(r["blocks"], float(r["idf"]), dls, base, self.stats.avgdl)
+            for r in sorted(rows, key=lambda x: x["term"])
+        ]
+        hit, scores, _ = _chunk_hits(
+            parts, dls.size, base, dels=self._dels_for([best]).get(best)
+        )
+        sc = scores[hit]
+        sc = sc[sc > 0]
+        if sc.size < k:
             return 0.0
-        return float(np.partition(hit, hit.size - k)[hit.size - k])
+        return float(np.partition(sc, sc.size - k)[sc.size - k])
 
     # ----------------------------------------------- suggestion expansion
 
@@ -1868,9 +1709,7 @@ class IndexReader:
                         i1 = int(np.searchsorted(tgts, ld, side="right"))
                         if i0 == i1:
                             continue
-                        bids, btfs = decode_block(
-                            fd, bytes(b["deltas"]), bytes(b["tfs"])
-                        )
+                        bids, btfs = decode_blocks([b])
                         pos = np.searchsorted(bids, tgts[i0:i1])
                         for t_, p_ in zip(tgts[i0:i1], pos):
                             if p_ < bids.size and bids[p_] == t_:
@@ -1951,6 +1790,9 @@ class IndexReader:
            query terms excluded; top ``fb_terms`` by (wt DESC, term
            ASC);
         3. final = the standard OR search over query ∪ expansion.
+
+        ``doc_filter`` scopes only that final search: the feedback set
+        is always drawn from the whole index.
 
         Driver traffic is parameter-bounded (fb ids, the feedback
         vocabulary's aggregated weights, the final top-k). Staleness
@@ -2099,14 +1941,9 @@ class IndexReader:
                 terms_out: List[str] = []
                 ids_out: List[np.ndarray] = []
                 for t, blocks in zip(pdf["term"], pdf["blocks"]):
-                    for blk in blocks:
-                        ids, _ = decode_block(
-                            int(blk["first_doc"]),
-                            bytes(blk["deltas"]),
-                            bytes(blk["tfs"]),
-                        )
-                        ids_out.append(ids)
-                        terms_out.extend([t] * ids.size)
+                    ids, _ = decode_blocks(blocks)
+                    ids_out.append(ids)
+                    terms_out.extend([t] * ids.size)
                 if ids_out:
                     yield pd.DataFrame(
                         {
@@ -2285,14 +2122,9 @@ class IndexReader:
             return empty
         docs_by_term: Dict[str, List[np.ndarray]] = {}
         for r in rows:
-            acc = docs_by_term.setdefault(r["term"], [])
-            for blk in r["blocks"]:
-                ids, _ = decode_block(
-                    int(blk["first_doc"]),
-                    bytes(blk["deltas"]),
-                    bytes(blk["tfs"]),
-                )
-                acc.append(ids)
+            docs_by_term.setdefault(r["term"], []).append(
+                decode_blocks(r["blocks"])[0]
+            )
         cand: Optional[np.ndarray] = None
         for t in uniq:
             got = docs_by_term.get(t)

@@ -80,9 +80,9 @@ def _with_norm(emb: DataFrame, d: "int | None" = None) -> DataFrame:
 # the cast + norm per query re-scans the embeddings table each time
 # (clustering already persists its unit frame, clustering.py). Keyed by
 # (session id, DataFrame semanticHash) so textually different reads of
-# the same logical plan share one persisted frame; bounded LRU — the
-# oldest entry is unpersisted when a 5th distinct embeddings frame
-# appears. The cache holds the FLOORED layout (persist bakes the
+# the same logical plan share one persisted frame; bounded FIFO — the
+# first-inserted entry is unpersisted when a 5th distinct embeddings
+# frame appears (a hit does not refresh an entry's age). The cache holds the FLOORED layout (persist bakes the
 # parallelism floor in, the bench-corpus pattern).
 _NORM_CACHE: "dict[tuple[int, int], tuple[DataFrame, int | None]]" = {}
 _NORM_CACHE_MAX = 4

@@ -142,27 +142,39 @@ def test_pruning_matches_exhaustive(synth_index):
         ]
 
 
-def test_local_fast_path_matches_distributed(synth_index):
+def test_local_fast_path_matches_distributed(spark, synth_index, tmp_path):
     """The driver-side small-query fast path must be plan-invisible:
     identical (doc_id, score, rank) to the distributed plan for every
-    mode, including prefix expansion and AND."""
-    for terms, mode in [
-        (["import"], P.EXACT_MATCH),
-        (["import", "return", "def"], P.WITH_SUGGESTIONS),
-        (["import", "return"], P.AND_MATCH),
-        (["im"], P.START_WITH),
-        (["nosuchterm"], P.EXACT_MATCH),
+    mode, including prefix expansion, AND, and AND over tombstones.
+    Both paths run the same chunk kernel in sorted-term order, so the
+    scores are exactly equal."""
+    from spark_search.maintain import delete_docs
+
+    and_q = ["import", "return"]
+    victims = [
+        r["doc_id"]
+        for r in synth_index.search(and_q, P.AND_MATCH, k=3).collect()
+    ]
+    assert victims
+    d2 = str(tmp_path / "local_vs_dist_deleted")
+    delete_docs(spark, synth_index.paths.root, d2, victims)
+    deleted = IndexReader(spark, d2)
+    for rd, terms, mode in [
+        (synth_index, ["import"], P.EXACT_MATCH),
+        (synth_index, ["import", "return", "def"], P.WITH_SUGGESTIONS),
+        (synth_index, and_q, P.AND_MATCH),
+        (synth_index, ["im"], P.START_WITH),
+        (synth_index, ["nosuchterm"], P.EXACT_MATCH),
+        (deleted, and_q, P.AND_MATCH),
     ]:
-        local = synth_index.search(terms, mode, k=10).collect()
-        dist = synth_index.search(
-            terms, mode, k=10, local_max_postings=0
-        ).collect()
-        assert [(r["doc_id"], r["rank"]) for r in local] == [
-            (r["doc_id"], r["rank"]) for r in dist
+        local = rd.search(terms, mode, k=10).collect()
+        dist = rd.search(terms, mode, k=10, local_max_postings=0).collect()
+        assert [(r["doc_id"], r["score"], r["rank"]) for r in local] == [
+            (r["doc_id"], r["score"], r["rank"]) for r in dist
         ], (terms, mode)
-        for lr, dr in zip(local, dist):
-            # per-term float accumulation order may differ by 1 ulp
-            assert lr["score"] == pytest.approx(dr["score"], rel=1e-12)
+        if rd is deleted:
+            assert local, "post-delete AND query must still match"
+            assert not {r["doc_id"] for r in local} & set(victims)
 
 
 def test_random_word_property(synth_index, synth):

@@ -6,6 +6,7 @@ from hypothesis import strategies as st
 
 from spark_search.codec import (
     decode_block,
+    decode_blocks,
     encode_blocks,
     varint_decode,
     varint_encode,
@@ -63,6 +64,82 @@ def test_block_roundtrip(postings, block_size):
         got_tfs.extend(t.tolist())
     assert got_docs == doc_ids.tolist()
     assert got_tfs == tfs.tolist()
+
+
+def _block_structs(postings_lists, block_size):
+    """encode_blocks output as stored block structs (the Arrow-to-pandas
+    dict shape); every other block carries bytearray payloads, the shape
+    a collected Row hands back."""
+    out = []
+    for postings in postings_lists:
+        postings = sorted(postings)
+        enc = encode_blocks(
+            np.array([p[0] for p in postings], dtype=np.int64),
+            np.array([p[1] for p in postings], dtype=np.int64),
+            block_size=block_size,
+        )
+        for first, last, n, max_tf, deltas, tf_bytes in enc:
+            wrap = bytearray if len(out) % 2 else bytes
+            out.append(
+                {"first_doc": first, "last_doc": last, "n": n,
+                 "max_tf": max_tf, "deltas": wrap(deltas),
+                 "tfs": wrap(tf_bytes)}
+            )
+    return out
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.lists(
+            st.tuples(
+                # ids and tfs past 2**35: multi-byte varints in both streams
+                st.one_of(
+                    st.integers(min_value=0, max_value=300),
+                    st.integers(min_value=2**35, max_value=2**52),
+                ),
+                st.one_of(
+                    st.integers(min_value=1, max_value=200),
+                    st.integers(min_value=2**35, max_value=2**40),
+                ),
+            ),
+            min_size=1,
+            max_size=300,
+            unique_by=lambda x: x[0],
+        ),
+        min_size=0,
+        max_size=6,
+    ),
+    st.sampled_from([1, 4, 128]),
+)
+def test_decode_blocks_equals_per_block(postings_lists, block_size):
+    blocks = _block_structs(postings_lists, block_size)
+    ids, tfs = decode_blocks(blocks)
+    parts = [
+        decode_block(b["first_doc"], bytes(b["deltas"]), bytes(b["tfs"]))
+        for b in blocks
+    ]
+    exp_ids = (
+        np.concatenate([p[0] for p in parts]) if parts
+        else np.empty(0, np.int64)
+    )
+    exp_tfs = (
+        np.concatenate([p[1] for p in parts]) if parts
+        else np.empty(0, np.int64)
+    )
+    assert ids.dtype == tfs.dtype == np.int64
+    assert ids.tolist() == exp_ids.tolist()
+    assert tfs.tolist() == exp_tfs.tolist()
+
+
+def test_decode_blocks_empty_and_single():
+    ids, tfs = decode_blocks([])
+    assert ids.size == tfs.size == 0
+    assert ids.dtype == tfs.dtype == np.int64
+    [blk] = _block_structs([[(7, 2), (2**36, 3), (2**36 + 5, 2**35)]], 128)
+    ids, tfs = decode_blocks([blk])
+    assert ids.tolist() == [7, 2**36, 2**36 + 5]
+    assert tfs.tolist() == [2, 3, 2**35]
 
 
 def test_encode_blocks_batch_equals_per_list():

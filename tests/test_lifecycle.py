@@ -61,6 +61,47 @@ def test_cancel_mid_build_keeps_old_generation(spark, fixture_corpus, tmp_path):
     assert len(r.search(["mila"], P.EXACT_MATCH, k=10).collect()) == 2
 
 
+def test_failed_postings_stage_joins_docs_thread(
+    spark, fixture_corpus, tmp_path, monkeypatch
+):
+    """A postings-stage failure must not orphan the concurrent docs
+    thread: it is joined before the error surfaces, its own error rides
+    along as the cause, and a clean rebuild of the same directory
+    succeeds."""
+    import pyspark
+
+    from spark_search import build as B
+
+    started = []
+
+    class _Recorded(pyspark.InheritableThread):
+        def start(self):
+            started.append(self)
+            super().start()
+
+    def _failing_encode(block_size):
+        raise RuntimeError("postings stage failed")
+
+    def _failing_stats(*args, **kwargs):
+        raise ValueError("docs stage failed")
+
+    d = str(tmp_path / "failing")
+    with monkeypatch.context() as m:
+        m.setattr(pyspark, "InheritableThread", _Recorded)
+        m.setattr(B, "_encode_udf", _failing_encode)
+        m.setattr(B, "CorpusStats", _failing_stats)
+        with pytest.raises(RuntimeError, match="postings stage failed") as ei:
+            build_index(spark, fixture_corpus, d, num_buckets=4, chunk_span=8)
+    assert started, "the docs branch must have run in its own thread"
+    assert not any(t.is_alive() for t in started)
+    assert isinstance(ei.value.__cause__, ValueError)
+    assert BuildManifest.load(d) is None
+
+    build_index(spark, fixture_corpus, d, num_buckets=4, chunk_span=8)
+    r = IndexReader(spark, d)
+    assert len(r.search(["mila"], P.EXACT_MATCH, k=10).collect()) == 2
+
+
 def test_abort_refuses_committed_index(spark, fixture_corpus, tmp_path):
     d = str(tmp_path / "keep")
     build_index(spark, fixture_corpus, d, num_buckets=4, chunk_span=8)

@@ -79,6 +79,25 @@ def test_indexed_batch_prefix_matches_per_query(spark, synth_index):
     assert got == exp
 
 
+def test_wide_prefix_fallback_matches_per_query(spark, synth_index, monkeypatch):
+    """A prefix expansion past _META_COLLECT_CAP leaves the term ->
+    query map uncollected, so search_many runs its per-(query_id,
+    chunk) fallback kernel. Its rows must be bit-identical to per-query
+    search under the same cap (with cap 0 every expansion is wide, so
+    both take idf from the distributed metadata scan)."""
+    from spark_search import query as Q
+
+    monkeypatch.setattr(Q, "_META_COLLECT_CAP", 0)
+    union = sorted({t for ts in QP.values() for t in ts})
+    assert synth_index._dict_expand(union, P.START_WITH)
+    got = _rows(synth_index.search_many(QP, P.START_WITH, k=10))
+    exp = _per_query(
+        lambda ts, **kw: synth_index.search(ts, P.START_WITH, **kw), QP, k=10
+    )
+    assert exp
+    assert got == exp
+
+
 def test_indexed_batch_respects_doc_filter(spark, synth, synth_index):
     pred = "lang IN ('java', 'python')"
     got = _rows(
